@@ -1,6 +1,6 @@
 package graft.blocking
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -166,32 +166,18 @@ object Blocking {
     // The still-hot gate only needs the sizes2 CONTENT, not the file: when
     // idle cores exist (any real cluster; not local[1], where two
     // concurrent jobs would share one core and the lineage recompute is
-    // pure extra work), the cheap gate job runs WHILE the durable sizes2
-    // write encodes+commits (guide §2.6 — overlap independent jobs); the
-    // write is joined before anything reads the file.
-    val overlap = spark.sparkContext.defaultParallelism >= 4
-    val sizes2Write: Option[java.util.concurrent.Future[_]] = if (overlap) {
-      val pool = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-        val t = new Thread(r, "graft-sizes2-write"); t.setDaemon(true); t
-      })
-      val f = pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit =
-          sizes2df.write.mode("overwrite").parquet(s"$dir/sizes2.parquet")
-      })
-      pool.shutdown()
-      Some(f)
-    } else {
-      sizes2df.write.mode("overwrite").parquet(s"$dir/sizes2.parquet")
-      None
-    }
-    // overlapped: gate from the (cheap columnar) lineage while the write
-    // runs; serial: the file already exists and reading it is cheaper than
-    // recomputing the union+agg
+    // pure extra work), the cheap gate job runs from the (columnar) lineage
+    // WHILE the durable sizes2 write encodes+commits; the write is joined
+    // before anything reads the file. Serial: the file already exists and
+    // reading it is cheaper than recomputing the union+agg.
     val stillHotIsEmpty =
-      if (overlap) sizes2df.filter(col("n") > cfg.maxBlock * 4L).isEmpty
-      else spark.read.parquet(s"$dir/sizes2.parquet")
-        .filter(col("n") > cfg.maxBlock * 4L).isEmpty
-    sizes2Write.foreach(_.get()) // propagate any write failure
+      if (spark.sparkContext.defaultParallelism >= 4) withStageWriter(spark) { w =>
+        w.write(sizes2df, s"$dir/sizes2.parquet")
+        sizes2df.filter(col("n") > cfg.maxBlock * 4L).isEmpty
+      } else {
+        sizes2df.write.mode("overwrite").parquet(s"$dir/sizes2.parquet")
+        spark.read.parquet(s"$dir/sizes2.parquet").filter(col("n") > cfg.maxBlock * 4L).isEmpty
+      }
     val stillHot = spark.read.parquet(s"$dir/sizes2.parquet")
       .filter(col("n") > cfg.maxBlock * 4L)
     val keysFile = new java.io.File(s"$dir/keys.parquet")
@@ -206,6 +192,64 @@ object Blocking {
         .write.mode("overwrite").parquet(s"$dir/keys.parquet")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(keyedPath))
     }
+  }
+
+  private val stageWriterIds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Durable block-table writes that OVERLAP the caller's downstream jobs
+    * (guide §2.6 — independent jobs back-fill idle cores): at most two run
+    * at once, on `graft-stage-write` threads of a pool owned by one
+    * [[withStageWriter]] scope. The threads are created on the caller's
+    * thread, so they inherit its job group (per-span cost attribution keys
+    * on it). A written file is durable only once that scope has returned:
+    * no manifest may name it before then. */
+  private[graft] final class StageWriter(sc: org.apache.spark.SparkContext) {
+    private val tag = s"graft-stage-write-${stageWriterIds.incrementAndGet()}"
+    private val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    private val pool = java.util.concurrent.Executors.newFixedThreadPool(2, r => {
+      val t = new Thread(r, "graft-stage-write"); t.setDaemon(true); threads.add(t); t
+    })
+    private val pending = scala.collection.mutable.ListBuffer.empty[java.util.concurrent.Future[_]]
+    @volatile private var cancelled = false
+
+    /** Starts the durable parquet write of `df` to `path`. */
+    def write(df: DataFrame, path: String): Unit =
+      pending += pool.submit(new Runnable {
+        def run(): Unit = if (!cancelled) {
+          sc.addJobTag(tag) // tags this writer thread's jobs only
+          df.write.mode("overwrite").parquet(path)
+        }
+      })
+
+    /** Joins every pending write, rethrowing the first failure. */
+    private[Blocking] def await(): Unit = {
+      try pending.foreach(_.get())
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      pending.clear()
+    }
+
+    /** Returns once every writer thread has exited. With `cancel`, queued
+      * writes never start and running ones have their jobs cancelled — a
+      * write may submit its job after a cancel, hence the repeat. */
+    private[Blocking] def close(cancel: Boolean): Unit = {
+      cancelled = cancel
+      pool.shutdown()
+      if (cancel) sc.cancelJobsWithTag(tag)
+      while (!pool.awaitTermination(50, java.util.concurrent.TimeUnit.MILLISECONDS))
+        if (cancel) sc.cancelJobsWithTag(tag)
+      threads.forEach(_.join())
+    }
+  }
+
+  /** Runs `body` with a fresh [[StageWriter]] and awaits its writes before
+    * returning. If `body` or a write throws, the remaining writes are
+    * cancelled and their threads joined before the exception propagates, so
+    * a failed run leaves no writer behind. */
+  private[graft] def withStageWriter[A](spark: SparkSession)(body: StageWriter => A): A = {
+    val w = new StageWriter(spark.sparkContext)
+    var ok = false
+    try { val a = body(w); w.await(); ok = true; a }
+    finally w.close(cancel = !ok)
   }
 
   /**
@@ -234,15 +278,19 @@ object Blocking {
    * OLD records whose key set differs from the prior run — the exact seed
    * set the incremental pipeline must re-score.
    *
-   * `stage(name, df)` must write `df` durably and return the read-back
-   * frame — it is applied to the tables the NEXT fold reads as prior state
-   * (raw_counts, sizes2, and the keys chain's keys_delta/keys_tombstones
-   * — see the chain note below). Per-fold scratch that feeds several actions
-   * but no future fold (crossed blocks, changed ids) is materialized with an
-   * eager localCheckpoint instead: a lazy plan would re-run the whole merge
-   * per consuming action (measured 2.3x the legacy recompute), while a
-   * durable write would pay a driver write+read barrier pair per table —
-   * at batch-fold scale those barriers, not work, dominate the wall.
+   * `stage(name, df)` is applied to the tables the NEXT fold reads as prior
+   * state (raw_counts, sizes2, and the keys chain's keys_delta/
+   * keys_tombstones — see the chain note below). It must return a
+   * MATERIALIZED frame with `df`'s content, which this method's consumers
+   * read without recomputing the merge, and it starts that table's durable
+   * write. The file is durable only once the caller's [[withStageWriter]]
+   * scope has returned; no manifest may name it before then. Per-fold scratch
+   * that feeds several actions but no future fold (crossed blocks, changed
+   * ids) is materialized with an eager localCheckpoint instead: a lazy plan
+   * would re-run the whole merge per consuming action (measured 2.3x a full
+   * key recompute), while a durable write would pay a driver write+read
+   * barrier pair per table — at batch-fold scale those barriers, not work,
+   * dominate the wall.
    */
   def mergeBlockKeys(priorKeys: DataFrame, priorRawCounts: DataFrame,
                      priorSizes2: DataFrame, newRecords: DataFrame,

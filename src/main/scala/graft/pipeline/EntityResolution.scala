@@ -69,7 +69,13 @@ object EntityResolution {
       // per-task CPU inflates with task concurrency, while parquet scan/write
       // scales ~1.0 — and a durable columnar checkpoint is the design that
       // survives at 100 TB anyway (maps to an Iceberg table per stage).
-      workDir: Option[String] = None)
+      workDir: Option[String] = None) {
+    // the stage-0/1 funnel prefilters bound each term by its maximum, which
+    // drops no pair only when every weight is non-negative
+    require(wJaroWinkler >= 0 && wTokenJaccard >= 0 && wLevenshtein >= 0,
+      s"score weights must be non-negative (the funnel prefilters are lossless " +
+        s"only then), got wJW=$wJaroWinkler wTJ=$wTokenJaccard wLev=$wLevenshtein")
+  }
 
   /** The semantic parameters whose equality the incremental exactness proof
     * depends on (blocking keys, SN windows, funnel weights/threshold, token
@@ -270,22 +276,19 @@ object EntityResolution {
       .select("id", "url", "source", "warc_ts", "lang", "title_norm",
         "domain_key", "sort_key", "sig", "tok", "n_tok")
       .write.mode("overwrite").parquet(recPath)
-    writeRecordsList(work, Seq(recPath))
-    writeConfigSig(work, cfg)
     val records = spark.read.parquet(recPath)
-
-    if (auditIds) {
-      val r = records.agg(countDistinct(col("id")).as("ids"),
-        countDistinct(col("url")).as("urls")).head()
-      require(r.getLong(0) == r.getLong(1),
-        s"record-id hash collision: ${r.getLong(1)} urls → ${r.getLong(0)} ids")
-    }
+    if (auditIds) auditIdsOf(records)
 
     // keys are consumed by BOTH sides of the pair self-join (and by the
     // stats/metrics surface); materializing them turns the deep
     // aggregate+broadcast blocking lineage into one cheap columnar scan per
-    // consumer instead of a recomputation per plan subtree
-    val (keys, blockStats) = materializeKeys(spark, records, work, cfg)
+    // consumer instead of a recomputation per plan subtree. The two count
+    // tables persisted beside them (raw_counts, sizes2) are the additive
+    // state [[resolveIncremental]] folds a batch's keys into; stats read the
+    // PERSISTED sizes table, never the lazy key-stream lineage.
+    Blocking.writeBlockTables(records, work, cfg.blocking)
+    val keys = spark.read.parquet(s"$work/keys.parquet")
+    val blockStats = Blocking.statsOf(spark.read.parquet(s"$work/sizes2.parquet"), cfg.blocking)
     // raw (non-distinct) branch variants: the single dedup below absorbs
     // every duplicate in one shuffle — per-branch inner distincts would each
     // re-shuffle the same pair stream first (measured as the pair-chain
@@ -318,6 +321,8 @@ object EntityResolution {
       edges.select(col("main_id").as("src"), col("sub_id").as("dst")), store)
       .write.mode("overwrite").parquet(compPath)
     val components = spark.read.parquet(compPath)
+    // a full (re)build is a one-file keys chain with no tombstones
+    writeManifests(work, cfg, Seq(recPath), Seq(s"$work/keys.parquet"), Seq.empty)
 
     val integrated = buildIntegrated(records, edges, components)
     val urlDim = records.select(col("id"), col("url"))
@@ -334,16 +339,19 @@ object EntityResolution {
    * there).
    *
    * `priorWorkDir` is the `workDir` of the previous resolve /
-   * resolveIncremental run, holding its three stage tables
-   * (records/edges/components — Iceberg tables on a real deployment).
+   * resolveIncremental run (Iceberg tables on a real deployment). It must
+   * hold that run's complete state — the records and keys chains, the
+   * raw_counts/sizes2 count tables, edges and components — or the fold is
+   * refused before any work ([[openPrior]]). The fold writes its own
+   * manifests only after every table of its state is durable, so a failed
+   * fold leaves no dir a later fold would accept and never touches the
+   * prior dir.
    *
    * What is recomputed vs reused, and why the result is EXACTLY equal to a
    * full re-resolve of old ∪ new (spec-gated, IncrementalSpec):
-   *   - block KEYS are recomputed over all records — a column-pruned scan of
-   *     the compact persisted features plus one aggregate; required for
-   *     exactness because hot-block re-keying depends on global block sizes.
-   *     (At 10¹² the (key, count) aggregate is itself a durable table
-   *     maintained additively per batch; the scan disappears.)
+   *   - block KEYS are folded additively into the prior run's persisted
+   *     count tables ([[Blocking.mergeBlockKeys]]) — O(batch + crossed
+   *     blocks), exact under hot-block re-keying (argued below).
    *   - candidate PAIRS are generated only where ≥1 side is new
    *     ([[Blocking.candidatePairsInvolving]]); the sorted-neighborhood pass
    *     runs only over buckets containing a new record. Old×old candidates
@@ -365,34 +373,17 @@ object EntityResolution {
     def ph(m: String): Unit =
       if (sys.env.get("SPARK_GRAFT_PHASES").contains("1"))
         System.err.println(f"[inc-phase] +${(System.nanoTime() - tInc0) / 1e9}%.1fs $m")
-    // determinism bisection: count every intermediate frame (extra actions —
-    // diagnosis only, off by default)
-    val foldCounts = sys.env.get("SPARK_GRAFT_FOLD_COUNTS").contains("1")
-    def fc(name: String, df: => DataFrame): Unit =
-      if (foldCounts) System.err.println(s"[fold-count] $name=${df.count()}")
 
+    val prior = openPrior(priorWorkDir)
     // the incremental ≡ full-re-resolve proof assumes the prior run's
     // semantic config equals this one's (SN drift / key-diff arguments are
     // config-relative) — refuse a mismatched fold instead of silently
     // diverging from a full re-resolve
-    val priorSig = readConfigSig(priorWorkDir)
-    require(priorSig.forall(_ == configSig(cfg)),
-      s"config changed since prior state was written:\n  prior: ${priorSig.get}" +
+    require(prior.configSig.forall(_ == configSig(cfg)),
+      s"config changed since prior state was written:\n  prior: ${prior.configSig.get}" +
         s"\n  now:   ${configSig(cfg)}\nincremental ≡ full only holds under an " +
         "identical config; run a full re-resolve instead")
-
-    val oldPaths = readRecordsList(priorWorkDir)
-    // the manifest chains across all prior state dirs (immutable files are
-    // never copied forward) — fail with a clear chain-broken error instead
-    // of a deep parquet path-not-found if an earlier dir was deleted or
-    // partially vacuumed (dir kept, part files gone — hence BOTH checks)
-    val missing = oldPaths.filterNot(p =>
-      new java.io.File(p).isDirectory && new java.io.File(p, "_SUCCESS").exists())
-    require(missing.isEmpty,
-      s"records manifest chain broken — prior state files missing: " +
-        s"${missing.mkString(", ")} (earlier incremental state dirs must " +
-        "outlive the table; copy them forward before vacuuming)")
-    val oldRecords = spark.read.parquet(oldPaths: _*)
+    val oldRecords = spark.read.parquet(prior.records: _*)
     val oldEdges = spark.read.parquet(s"$priorWorkDir/edges.parquet")
     val oldComponents = spark.read.parquet(s"$priorWorkDir/components.parquet")
 
@@ -433,16 +424,10 @@ object EntityResolution {
       s"$reCrawled record(s) in the batch already exist in prior state " +
         "(re-crawl/update); dedupe the batch or run a compacting re-resolve " +
         "— blind append would duplicate RecordId rows")
-    writeRecordsList(work, oldPaths :+ newRecPath)
-    writeConfigSig(work, cfg)
-    val records = spark.read.parquet((oldPaths :+ newRecPath): _*)
+    val recordPaths = prior.records :+ newRecPath
+    val records = spark.read.parquet(recordPaths: _*)
     val newIds = newRecords.select(col("id"))
-    if (auditIds) {
-      val r = records.agg(countDistinct(col("id")).as("ids"),
-        countDistinct(col("url")).as("urls")).head()
-      require(r.getLong(0) == r.getLong(1),
-        s"record-id hash collision: ${r.getLong(1)} urls → ${r.getLong(0)} ids")
-    }
+    if (auditIds) auditIdsOf(records)
 
     // ---- keys + affected-record detection: the reason `incremental ≡ full
     // re-resolve` holds UNCONDITIONALLY, not just while no block crosses a
@@ -461,9 +446,7 @@ object EntityResolution {
     //      dropped and all their candidates re-derived + re-scored (scoring
     //      is a pure content function, so surviving edges come back
     //      identical). In the common case no block crosses a class and the
-    //      set is empty. A prior state dir from a pre-counts build falls
-    //      back to the legacy recompute-and-diff path (one fold later the
-    //      chain is upgraded, since this run persists its count tables).
+    //      set is empty.
     //
     //  (b) sorted-neighborhood drift: new records inserted into a bucket
     //      push old neighbors apart. Insertions can only GROW old×old
@@ -473,102 +456,49 @@ object EntityResolution {
     //      edges dropped. Recompute SN over the touched buckets with and
     //      without the batch: the difference (minus pairs still generated
     //      by shared block keys) is the exact stale set.
-    val priorHasCounts =
-      new java.io.File(s"$priorWorkDir/raw_counts.parquet/_SUCCESS").exists() &&
-        new java.io.File(s"$priorWorkDir/sizes2.parquet/_SUCCESS").exists()
-    // Durable keys-fold stage writes OVERLAP downstream compute (guide
-    // §2.6 — independent jobs back-fill idle cores): each stage is
-    // materialized once with an eager localCheckpoint (the same single
-    // computation + lineage cut the old write-then-read-back barrier
-    // bought), downstream consumers proceed immediately from the checkpoint
-    // blocks, and the parquet encode+commit runs on a driver side thread.
-    // All pending writes are JOINED before the chain manifests are written,
-    // so the crash contract is unchanged: manifests-last means a failed or
-    // interrupted fold leaves prior state intact and the next fold fails
-    // loudly on the broken chain, never reads a torn table.
-    val pendingWrites = scala.collection.mutable.ListBuffer.empty[java.util.concurrent.Future[_]]
-    val writePool = java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-      val t = new Thread(r, "graft-stage-write"); t.setDaemon(true); t
-    })
-    def awaitStageWrites(): Unit = {
-      pendingWrites.foreach(_.get()) // propagates any write failure
-      pendingWrites.clear()
-    }
-    val (keys, blockStats, keyChangedIds) = if (priorHasCounts) {
-      val stager = (name: String, df: DataFrame) => {
-        val ckpt = df.localCheckpoint(true)
-        pendingWrites += writePool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit =
-            ckpt.write.mode("overwrite").parquet(s"$work/$name.parquet")
-        })
-        ph(s"  keys-fold stage: $name (write overlapped)")
-        ckpt
-      }
-      // prior keys = the manifest chain's assembly (a base resolve dir is a
-      // one-file chain); validate like the records manifest — a vanished
-      // chain file must fail loudly, not as a deep parquet error
-      val (priorKeyPaths, priorTombPaths) = readKeysChain(priorWorkDir)
-      val chainMissing = (priorKeyPaths ++ priorTombPaths).filterNot(p =>
-        new java.io.File(p).isDirectory && new java.io.File(p, "_SUCCESS").exists())
-      require(chainMissing.isEmpty,
-        s"keys manifest chain broken — prior state files missing: " +
-          s"${chainMissing.mkString(", ")} (earlier incremental state dirs " +
-          "must outlive the table; copy them forward before vacuuming)")
-      val (keysAll, stats, changedOldIds) = Blocking.mergeBlockKeys(
-        assembleKeys(spark, priorKeyPaths, priorTombPaths),
+    //
+    // Each keys-fold stage table is materialized once with an eager
+    // localCheckpoint (the single computation + lineage cut a write-then-
+    // read-back barrier would buy); downstream consumers proceed from the
+    // checkpoint blocks while its parquet write runs on the stage writer.
+    val (keysAll, blockStats, keyChangedIds) = Blocking.withStageWriter(spark) { w =>
+      val folded = Blocking.mergeBlockKeys(
+        assembleKeys(spark, prior.keys, prior.tombstones),
         spark.read.parquet(s"$priorWorkDir/raw_counts.parquet"),
         spark.read.parquet(s"$priorWorkDir/sizes2.parquet"),
-        newRecords, records, cfg.blocking, stager)
+        newRecords, records, cfg.blocking, (name, df) => {
+          val ckpt = df.localCheckpoint(true)
+          w.write(ckpt, s"$work/$name.parquet")
+          ph(s"  keys-fold stage: $name (write overlapped)")
+          ckpt
+        })
       ph("keys folded additively")
-      // chain manifests: this fold appended keys_delta + keys_tombstones;
-      // compact back to one file once the chain is long (amortized
-      // O(batch) — the rewrite runs once per compactLen folds)
-      val keyPaths = priorKeyPaths :+ s"$work/keys_delta.parquet"
-      val tombPaths = priorTombPaths :+ s"$work/keys_tombstones.parquet"
-      // join the overlapped stage writes BEFORE any chain manifest lands:
-      // a manifest must never reference a file still being written
-      awaitStageWrites()
-      ph("stage writes joined")
-      val keysOut = if (keyPaths.length >= keysChainCompactLen) {
-        keysAll.write.mode("overwrite").parquet(s"$work/keys.parquet")
-        writeKeysChain(work, Seq(s"$work/keys.parquet"), Seq.empty)
-        ph("keys chain compacted")
-        spark.read.parquet(s"$work/keys.parquet")
-      } else {
-        writeKeysChain(work, keyPaths, tombPaths)
-        // The assembled chain view feeds ~5 consumers (keysEff, both
-        // candidate-join sides, both sharedKey sides). Through round 5 it
-        // was eagerly checkpointed because those consumers SHUFFLED it —
-        // materializing once beat re-shuffling per consumer. Since the
-        // round-6 broadcast-stream restructure every consumer STREAMS the
-        // keys side (the batch-bounded side broadcasts), so each lazy
-        // consumption is one column-pruned chain scan + a broadcast
-        // anti-join — cheaper distributed inside the consumers' own jobs
-        // than the serial 90 MB materialization barrier the checkpoint
-        // cost on the fold's critical path.
-        keysAll
-      }
-      (keysOut, stats, changedOldIds)
-    } else {
-      // legacy prior state: recompute keys over all records, then diff
-      // against the prior keys table per id (sorted key-set compare — one
-      // partial-aggregable shuffle per side + one join on 8-byte ids)
-      val (keysFull, stats) = materializeKeys(spark, records, work, cfg)
-      ph("keys materialized (legacy full recompute)")
-      val oldKeysPrior = spark.read.parquet(s"$priorWorkDir/keys.parquet")
-        .select("id", "block_key")
-      def keySets(df: DataFrame) = df.groupBy("id")
-        .agg(sort_array(collect_list(col("block_key"))).as("ks"))
-      val changed = keySets(oldKeysPrior).withColumnRenamed("ks", "ks_prior")
-        .join(keySets(keysFull.select("id", "block_key")), Seq("id"), "full_outer")
-        .filter(not(col("ks_prior") <=> col("ks")))
-        .select("id")
-        .join(newIds, Seq("id"), "left_anti") // new ids trivially "gained" keys
-        .localCheckpoint(true) // scratch: feeds 3 actions this fold only
-      ph("key-change diff materialized")
-      (keysFull, stats, changed)
+      folded
     }
-    writePool.shutdown()
+    ph("stage writes joined")
+    // this fold appended keys_delta + keys_tombstones to the chain; compact
+    // back to one file once the chain is long (amortized O(batch) — the
+    // rewrite runs once per compactLen folds)
+    val keyPaths = prior.keys :+ s"$work/keys_delta.parquet"
+    val tombPaths = prior.tombstones :+ s"$work/keys_tombstones.parquet"
+    val compacted = keyPaths.length >= keysChainCompactLen
+    val keys = if (compacted) {
+      keysAll.write.mode("overwrite").parquet(s"$work/keys.parquet")
+      ph("keys chain compacted")
+      spark.read.parquet(s"$work/keys.parquet")
+    } else {
+      // The assembled chain view feeds ~5 consumers (keysEff, both
+      // candidate-join sides, both sharedKey sides). Through round 5 it
+      // was eagerly checkpointed because those consumers SHUFFLED it —
+      // materializing once beat re-shuffling per consumer. Since the
+      // round-6 broadcast-stream restructure every consumer STREAMS the
+      // keys side (the batch-bounded side broadcasts), so each lazy
+      // consumption is one column-pruned chain scan + a broadcast
+      // anti-join — cheaper distributed inside the consumers' own jobs
+      // than the serial 90 MB materialization barrier the checkpoint
+      // cost on the fold's critical path.
+      keysAll
+    }
     // seed ids feed 5+ consumers (keysEff, touched buckets, both SN-seed
     // sides) — one materialization instead of a union+distinct shuffle per
     // consumer; every semi-join against a corpus-wide table hints it
@@ -581,9 +511,6 @@ object EntityResolution {
     // keys table instead of shuffling it per branch
     val keysEff = keys.join(bcB(seedIds), Seq("id"), "left_semi")
       .localCheckpoint(true)
-    fc("keyChangedIds", keyChangedIds)
-    fc("keys", keys)
-    fc("keysEff", keysEff)
 
     val bucketOf = substring(col("sort_key"), 1, cfg.blocking.snBucketLen)
     val touchedBuckets = records.join(bcB(seedIds), Seq("id"), "left_semi")
@@ -633,11 +560,6 @@ object EntityResolution {
       .localCheckpoint(true)
     ph("sn-drift stale set materialized")
 
-    fc("touchedBuckets", touchedBuckets)
-    fc("snRecords", snRecords)
-    fc("sn", sn)
-    fc("snSeed", snSeed)
-    fc("candInvolvingRaw", Blocking.candidatePairsInvolvingRaw(keysEff, keys))
     // checkpointed: feeds the scoring funnel, the pair-id pruning frame
     // below, AND Result.candidatePairs (probed/evaluated after the fold) —
     // batch-bounded rows, one materialization
@@ -645,7 +567,6 @@ object EntityResolution {
       Blocking.candidatePairsInvolvingRaw(keysEff, keys, broadcastNew = smallBatch)
         .union(snSeed))
       .localCheckpoint(true)
-    fc("pairs", pairs)
 
     // score only pairs involving a new or key-changed record; all other old
     // edges are reused verbatim except the stale SN set computed above.
@@ -728,6 +649,9 @@ object EntityResolution {
       .write.mode("overwrite").parquet(compPath)
     val components = spark.read.parquet(compPath)
     ph("clustering folded")
+    // manifests last: every table of this fold's state is durable by now
+    if (compacted) writeManifests(work, cfg, recordPaths, Seq(s"$work/keys.parquet"), Seq.empty)
+    else writeManifests(work, cfg, recordPaths, keyPaths, tombPaths)
 
     val integrated = buildIntegrated(records, edges, components)
     val urlDim = records.select(col("id"), col("url"))
@@ -735,81 +659,86 @@ object EntityResolution {
       attachUrls(pairs, urlDim), keys, blockStats)
   }
 
-  /** Records-table manifest: one absolute parquet path per line. resolve()
-    * writes a single entry; each incremental batch appends its new-records
-    * path, so prior record files are immutable (Iceberg append semantics —
-    * the chain of state dirs must outlive the table). */
-  private def writeRecordsList(work: String, paths: Seq[String]): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(work, "records.list"),
-      paths.map(absolutize).mkString("\n"))
-
-  /** Chain manifests must survive a CWD change: a relative workDir written
-    * verbatim would make every later fold CWD-dependent (the earlier dirs
-    * are live state until compaction), so paths are absolutized on write. */
-  private def absolutize(p: String): String =
-    java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
-
-  private def writeConfigSig(work: String, cfg: Config): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(work, "config.sig"), configSig(cfg))
-
-  /** None only for pre-signature state dirs (written by older builds). */
-  private def readConfigSig(work: String): Option[String] = {
-    val p = java.nio.file.Paths.get(work, "config.sig")
-    if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readString(p))
-    else None
+  /** Writes a run's state manifests, called only once every table they
+    * name is durable. In write order:
+    *   - `records.list`: the records chain, one parquet path per line.
+    *     resolve() writes a single entry; each fold appends its new-records
+    *     path, so prior record files are immutable (Iceberg append semantics
+    *     — the chain of state dirs must outlive the table).
+    *   - `config.sig`: [[configSig]], checked by the next fold.
+    *   - `tombstones.list`, then `keys.list`: the keys chain — files whose
+    *     union, minus the block keys in the tombstone files, equals the
+    *     current keys table ([[Blocking.mergeBlockKeys]] chain note).
+    *     Tombstones FIRST: keys.list is the chain's existence marker on the
+    *     read side, so a crash between the two writes must leave the chain
+    *     UNREADABLE (the next fold refuses it), never readable with the
+    *     tombstones silently missing —
+    *     that would resurrect every tombstoned (crossed/newly-hot) key row
+    *     and diverge from a full re-resolve without any error.
+    * Paths are absolutized: a relative workDir written verbatim would make
+    * every later fold CWD-dependent (the earlier dirs are live state until
+    * compaction). */
+  private def writeManifests(work: String, cfg: Config, recordPaths: Seq[String],
+                             keyPaths: Seq[String], tombPaths: Seq[String]): Unit = {
+    def put(name: String, body: String): Unit =
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(work, name), body)
+    def list(paths: Seq[String]): String =
+      paths.map(p => java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString).mkString("\n")
+    put("records.list", list(recordPaths))
+    put("config.sig", configSig(cfg))
+    put("tombstones.list", list(tombPaths))
+    put("keys.list", list(keyPaths))
   }
 
-  private def readRecordsList(work: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(work, "records.list")
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.readString(p).split("\n").toSeq.filter(_.nonEmpty)
-    else Seq(s"$work/records.parquet")
+  /** A prior state dir's records chain, keys chain (+ tombstones) and
+    * config signature (None only for dirs written without one). */
+  private case class Prior(records: Seq[String], keys: Seq[String],
+                           tombstones: Seq[String], configSig: Option[String])
+
+  /** Reads `dir`'s manifests and checks, once, that every table the fold
+    * will read is committed (present with its `_SUCCESS`): both chains,
+    * whose files may live in earlier state dirs, the count tables, edges and
+    * components. A dir without manifests (tables written through the public
+    * stage calls) reads as one-file chains with no tombstones. */
+  private def openPrior(dir: String): Prior = {
+    def read(name: String): Option[String] = {
+      val p = java.nio.file.Paths.get(dir, name)
+      if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readString(p)) else None
+    }
+    def chain(name: String): Option[Seq[String]] =
+      read(name).map(_.split("\n").toSeq.filter(_.nonEmpty))
+    val keys = chain("keys.list")
+    val prior = Prior(chain("records.list").getOrElse(Seq(s"$dir/records.parquet")),
+      keys.getOrElse(Seq(s"$dir/keys.parquet")),
+      if (keys.isEmpty) Seq.empty
+      else chain("tombstones.list").getOrElse(throw new IllegalStateException(
+        // see writeManifests: a torn manifest, not an empty tombstone set
+        s"keys manifest torn in $dir: keys.list exists without " +
+          "tombstones.list (interrupted write?) — restore the state dir " +
+          "or run a full re-resolve")),
+      read("config.sig"))
+    val missing = (prior.records ++ prior.keys ++ prior.tombstones ++
+      Seq("raw_counts", "sizes2", "edges", "components").map(t => s"$dir/$t.parquet"))
+      .filterNot(p => new java.io.File(p, "_SUCCESS").exists())
+    require(missing.isEmpty,
+      s"prior state incomplete / chain broken in $dir — tables missing or " +
+        s"uncommitted (no _SUCCESS): ${missing.mkString(", ")}. Earlier state " +
+        "dirs of a chain must outlive it (copy them forward before vacuuming); " +
+        "otherwise run a full re-resolve")
+    prior
   }
 
-  /** Keys-table manifest chain: `keys.list` holds the delta file paths
-    * whose union, minus the block keys in the `tombstones.list` files,
-    * equals the current keys table ([[Blocking.mergeBlockKeys]] chain
-    * note). A base resolve dir (no `keys.list`) is a one-file chain with
-    * no tombstones. Chains are compacted back to a single file once they
-    * grow past [[keysChainCompactLen]] files — amortized O(batch), and the
-    * read-side broadcast anti-join stays bounded. */
-  private def writeKeysChain(work: String, keyPaths: Seq[String],
-                             tombPaths: Seq[String]): Unit = {
-    // tombstones FIRST: keys.list is the manifest's existence marker on the
-    // read side, so a crash between the two writes must leave the chain
-    // UNREADABLE (loud chain-broken error next fold), never readable with
-    // the tombstones silently missing — that would resurrect every
-    // tombstoned (crossed/newly-hot) key row and diverge from a full
-    // re-resolve without any error.
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(work, "tombstones.list"),
-      tombPaths.map(absolutize).mkString("\n"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(work, "keys.list"),
-      keyPaths.map(absolutize).mkString("\n"))
-  }
-
-  private def readKeysChain(work: String): (Seq[String], Seq[String]) = {
-    val kp = java.nio.file.Paths.get(work, "keys.list")
-    if (java.nio.file.Files.exists(kp)) {
-      val tp = java.nio.file.Paths.get(work, "tombstones.list")
-      // see writeKeysChain: a keys.list without its tombstones.list is a
-      // torn manifest, not an empty tombstone set
-      if (!java.nio.file.Files.exists(tp))
-        throw new IllegalStateException(
-          s"keys manifest torn in $work: keys.list exists without " +
-            "tombstones.list (interrupted write?) — restore the state dir " +
-            "or run a full re-resolve")
-      val tombs =
-        java.nio.file.Files.readString(tp).split("\n").toSeq.filter(_.nonEmpty)
-      (java.nio.file.Files.readString(kp).split("\n").toSeq.filter(_.nonEmpty), tombs)
-    } else (Seq(s"$work/keys.parquet"), Seq.empty)
+  /** One-pass distinct-count audit of the id dictionary: aborts on a
+    * record-id hash collision instead of silently merging two records. */
+  private def auditIdsOf(records: DataFrame): Unit = {
+    val r = records.agg(countDistinct(col("id")), countDistinct(col("url"))).head()
+    require(r.getLong(0) == r.getLong(1),
+      s"record-id hash collision: ${r.getLong(1)} urls → ${r.getLong(0)} ids")
   }
 
   /** Chain files before a compacting rewrite (test override via the
-    * `graft.keys.compact.len` system property). */
+    * `graft.keys.compact.len` system property) — amortized O(batch), and the
+    * read-side broadcast anti-join stays bounded. */
   private def keysChainCompactLen: Int =
     sys.props.get("graft.keys.compact.len").map(_.toInt).getOrElse(8)
 
@@ -821,26 +750,6 @@ object EntityResolution {
     else base.join(
       broadcast(spark.read.parquet(tombPaths: _*).select("block_key").distinct()),
       Seq("block_key"), "left_anti")
-  }
-
-  /** Compute block keys once and materialize them as a stage table; the
-    * stats frame aggregates the deep lineage (so dropped-block metrics stay
-    * exact) while every downstream consumer scans the columnar keys. The
-    * two count tables (raw block sizes, final block sizes) are persisted
-    * beside the keys — they are the additive state that lets
-    * [[resolveIncremental]] fold a batch's keys in O(batch + crossed
-    * blocks) via [[Blocking.mergeBlockKeys]] instead of recomputing the key
-    * stream over the whole corpus. */
-  private def materializeKeys(spark: SparkSession, records: DataFrame,
-                              work: String,
-                              cfg: Config): (DataFrame, DataFrame) = {
-    Blocking.writeBlockTables(records, work, cfg.blocking)
-    // a full (re)build is a one-file keys chain with no tombstones
-    writeKeysChain(work, Seq(s"$work/keys.parquet"), Seq.empty)
-    // stats over the PERSISTED sizes table — a stats consumer must not
-    // silently re-derive the whole key stream through the lazy lineage
-    (spark.read.parquet(s"$work/keys.parquet"),
-      Blocking.statsOf(spark.read.parquet(s"$work/sizes2.parquet"), cfg.blocking))
   }
 
   /** Map (main_id, sub_id [, score]) back to url space for output/eval. */

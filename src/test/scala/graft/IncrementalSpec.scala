@@ -1,9 +1,16 @@
 package graft
 
+import java.io.File
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.pipeline.EntityResolution
 
@@ -186,31 +193,74 @@ class IncrementalSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("torn"))
   }
 
-  test("legacy prior state (no persisted count tables): fallback diff path == full") {
-    // a state dir written by a pre-counts build lacks raw_counts/sizes2 —
-    // the fold must take the recompute-and-diff path and still be exact
+  test("a fold failing mid-keys-stage stops its stage writes and leaves prior state intact") {
     val all = graft.testgen.WebCorpus.pages(spark, 300).toDF()
     val isNew = pmod(xxhash64(col("url")), lit(5)) === 4
-    val Seq(d1, d2, d3) = (1 to 3).map(i =>
-      Files.createTempDirectory(s"graft-leg$i").toString)
+    val Seq(d1, d2) = (1 to 2).map(i =>
+      Files.createTempDirectory(s"graft-fault$i").toString)
     EntityResolution.resolve(all.filter(!isNew),
       EntityResolution.Config(workDir = Some(d1))).integrated.count()
-    for (t <- Seq("raw_counts.parquet", "sizes2.parquet"))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$d1/$t"))
-    val inc = EntityResolution.resolveIncremental(all.filter(isNew), d1,
-      EntityResolution.Config(workDir = Some(d2)))
-    val full = EntityResolution.resolve(all,
-      EntityResolution.Config(workDir = Some(d3)))
-    val cols = Seq("RecordId", "InputSourceARN", "MatchID", "ConfidenceLevel")
-    val a = inc.integrated.select(cols.map(col): _*)
-    val b = full.integrated.select(cols.map(col): _*)
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
-      "legacy fallback diverged from full re-resolve")
-    // and the upgraded chain: d2 now has count tables, so a further fold
-    // over it takes the additive path (guard: the tables exist)
-    assert(new java.io.File(s"$d2/raw_counts.parquet/_SUCCESS").exists() &&
-      new java.io.File(s"$d2/sizes2.parquet/_SUCCESS").exists(),
-      "fold did not persist count tables for the next batch")
+    // garbage over the column data of every prior sizes2 part file, footer
+    // kept (and checksum file dropped, or the checksum would catch it first):
+    // the table still opens, so the fold fails on its first sizes2 DATA read
+    // — the keys fold's sizes2 stage, after the raw_counts write has started
+    val sizes2 = new File(d1, "sizes2.parquet")
+    for (f <- sizes2.listFiles() if f.getName.endsWith(".parquet")) {
+      val b = Files.readAllBytes(f.toPath)
+      val footerLen = ByteBuffer.wrap(b, b.length - 8, 4).order(ByteOrder.LITTLE_ENDIAN).getInt
+      java.util.Arrays.fill(b, 4, b.length - 8 - footerLen, 0xff.toByte)
+      Files.write(f.toPath, b)
+      Files.deleteIfExists(new File(sizes2, s".${f.getName}.crc").toPath)
+    }
+    intercept[Exception](spark.read.parquet(sizes2.toString).collect())
+    def bytesOf(dir: String) = FileUtils.listFiles(new File(dir), null, true).asScala
+      .map(f => f.getPath -> Files.readAllBytes(f.toPath).toSeq).toMap
+    val priorBefore = bytesOf(d1)
+
+    intercept[Exception] {
+      EntityResolution.resolveIncremental(all.filter(isNew), d1,
+        EntityResolution.Config(workDir = Some(d2))).integrated.count()
+    }
+    val writers = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName == "graft-stage-write" && t.isAlive)
+    assert(writers.isEmpty, s"${writers.size} stage-write thread(s) outlived the failed fold")
+    eventually(timeout(30.seconds)) {
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+        "a Spark job of the failed fold is still running")
+    }
+    assert(bytesOf(d1) == priorBefore, "the failed fold modified the prior state dir")
+    val manifests = Seq("records.list", "config.sig", "tombstones.list", "keys.list")
+      .filter(m => new File(d2, m).exists())
+    assert(manifests.isEmpty, s"the failed fold wrote manifests: $manifests")
+  }
+
+  test("a fold refuses prior state missing a table, or a records chain missing a commit") {
+    val all = graft.testgen.WebCorpus.pages(spark, 300).toDF()
+    val slot = pmod(xxhash64(col("url")), lit(5))
+    val Seq(d1, d2, d3) = (1 to 3).map(i =>
+      Files.createTempDirectory(s"graft-refuse$i").toString)
+    EntityResolution.resolve(all.filter(slot < 3),
+      EntityResolution.Config(workDir = Some(d1))).integrated.count()
+    EntityResolution.resolveIncremental(all.filter(slot === 3), d1,
+      EntityResolution.Config(workDir = Some(d2))).integrated.count()
+    def assertRefused(prior: String): Unit = {
+      val ex = intercept[IllegalArgumentException] {
+        EntityResolution.resolveIncremental(all.filter(slot === 4), prior,
+          EntityResolution.Config(workDir = Some(d3))).integrated.count()
+      }
+      assert(ex.getMessage.contains("prior state incomplete / chain broken"), ex.getMessage)
+    }
+    // copies of the fold's state dir, one table removed each; their chain
+    // manifests still name the intact files in d1/d2
+    for (t <- Seq("raw_counts", "sizes2", "edges")) {
+      val broken = Files.createTempDirectory(s"graft-refuse-$t").toFile
+      FileUtils.copyDirectory(new File(d2), broken)
+      FileUtils.deleteDirectory(new File(broken, s"$t.parquet"))
+      assertRefused(broken.toString)
+    }
+    // the records chain's EARLIER file (in d1) lost its commit marker
+    Files.delete(new File(d1, "records.parquet/_SUCCESS").toPath)
+    assertRefused(d2)
   }
 
   test("re-crawl guard: a batch url already in prior state fails fast") {

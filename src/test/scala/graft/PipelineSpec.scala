@@ -59,4 +59,15 @@ class PipelineSpec extends AnyFunSuite {
       assert(a.sameElements(b), "clusters must not depend on partitioning")
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
+
+  test("Config rejects a negative score weight (the funnel prefilters assume w >= 0)") {
+    for (cfg <- Seq(
+        () => EntityResolution.Config(wJaroWinkler = -0.1),
+        () => EntityResolution.Config(wTokenJaccard = -0.1),
+        () => EntityResolution.Config(wLevenshtein = -1e-9))) {
+      val ex = intercept[IllegalArgumentException](cfg())
+      assert(ex.getMessage.contains("non-negative"))
+    }
+    EntityResolution.Config(wJaroWinkler = 0.0, wLevenshtein = 0.0) // zero is allowed
+  }
 }
