@@ -392,19 +392,13 @@ object Blocking {
     a.join(b, "block_key").select("main_id", "sub_id")
   }
 
-  /**
-   * Cross-source candidate pairs where AT LEAST ONE side is a new record —
-   * the incremental-batch variant of [[candidatePairs]]. `keysNew` must be
-   * the subset of `keysAll` belonging to the new batch; old×old pairs are
-   * never generated, so pair-scoring work per batch is proportional to the
-   * batch's block overlap, not the corpus.
-   */
-  def candidatePairsInvolving(keysNew: DataFrame, keysAll: DataFrame): DataFrame =
-    candidatePairsInvolvingRaw(keysNew, keysAll).distinct()
-
-  /** [[candidatePairsInvolving]] without the dedup shuffle — same rationale
-    * as [[candidatePairsRaw]] (the incremental pipeline distincts once after
-    * unioning with its sorted-neighborhood seed pairs).
+  /** Cross-source candidate pairs where AT LEAST ONE side is a new record —
+    * the incremental-batch variant of [[candidatePairsRaw]], likewise without
+    * the dedup shuffle (the incremental pipeline distincts once after
+    * unioning with its sorted-neighborhood seed pairs). `keysNew` must be the
+    * subset of `keysAll` belonging to the new batch; old×old pairs are never
+    * generated, so pair-scoring work per batch is proportional to the
+    * batch's block overlap, not the corpus.
     *
     * `broadcastNew = true` hints the (batch-bounded) keysNew side broadcast
     * in both branches, so the corpus-wide keysAll side STREAMS instead of

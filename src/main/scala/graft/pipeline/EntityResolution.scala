@@ -353,7 +353,7 @@ object EntityResolution {
    *     count tables ([[Blocking.mergeBlockKeys]]) — O(batch + crossed
    *     blocks), exact under hot-block re-keying (argued below).
    *   - candidate PAIRS are generated only where ≥1 side is new
-   *     ([[Blocking.candidatePairsInvolving]]); the sorted-neighborhood pass
+   *     ([[Blocking.candidatePairsInvolvingRaw]]); the sorted-neighborhood pass
    *     runs only over buckets containing a new record. Old×old candidates
    *     were scored by the prior run; scoring is a pure function of row
    *     content, so their edges are reused verbatim.
@@ -369,10 +369,6 @@ object EntityResolution {
     val spark = newPages.sparkSession
     val work = cfg.workDir.getOrElse(freshWorkDir())
     require(work != priorWorkDir, "incremental output workDir must differ from prior state dir")
-    val tInc0 = System.nanoTime()
-    def ph(m: String): Unit =
-      if (sys.env.get("SPARK_GRAFT_PHASES").contains("1"))
-        System.err.println(f"[inc-phase] +${(System.nanoTime() - tInc0) / 1e9}%.1fs $m")
 
     val prior = openPrior(priorWorkDir)
     // the incremental ≡ full-re-resolve proof assumes the prior run's
@@ -395,7 +391,6 @@ object EntityResolution {
       .select(oldRecords.columns.map(col): _*)
       .write.mode("overwrite").parquet(newRecPath)
     val newRecords = spark.read.parquet(newRecPath)
-    ph("batch normalized")
     // Batch-vs-corpus asymmetry is the fold's whole point: every frame
     // derived from the batch (new ids, seed ids, touched buckets, batch
     // keys, batch-involving pairs) is orders of magnitude smaller than the
@@ -462,20 +457,16 @@ object EntityResolution {
     // read-back barrier would buy); downstream consumers proceed from the
     // checkpoint blocks while its parquet write runs on the stage writer.
     val (keysAll, blockStats, keyChangedIds) = Blocking.withStageWriter(spark) { w =>
-      val folded = Blocking.mergeBlockKeys(
+      Blocking.mergeBlockKeys(
         assembleKeys(spark, prior.keys, prior.tombstones),
         spark.read.parquet(s"$priorWorkDir/raw_counts.parquet"),
         spark.read.parquet(s"$priorWorkDir/sizes2.parquet"),
         newRecords, records, cfg.blocking, (name, df) => {
           val ckpt = df.localCheckpoint(true)
           w.write(ckpt, s"$work/$name.parquet")
-          ph(s"  keys-fold stage: $name (write overlapped)")
           ckpt
         })
-      ph("keys folded additively")
-      folded
     }
-    ph("stage writes joined")
     // this fold appended keys_delta + keys_tombstones to the chain; compact
     // back to one file once the chain is long (amortized O(batch) — the
     // rewrite runs once per compactLen folds)
@@ -484,7 +475,6 @@ object EntityResolution {
     val compacted = keyPaths.length >= keysChainCompactLen
     val keys = if (compacted) {
       keysAll.write.mode("overwrite").parquet(s"$work/keys.parquet")
-      ph("keys chain compacted")
       spark.read.parquet(s"$work/keys.parquet")
     } else {
       // The assembled chain view feeds ~5 consumers (keysEff, both
@@ -522,7 +512,6 @@ object EntityResolution {
     // durable write+read barrier pair
     val sn = Blocking.sortedNeighborhoodPairs(snRecords, cfg.blocking)
       .localCheckpoint(true)
-    ph("sn pairs of touched buckets materialized")
     val snSeed = sn.join(bcB(seedIds.withColumnRenamed("id", "main_id")), Seq("main_id"), "left_semi")
       .union(sn.join(bcB(seedIds.withColumnRenamed("id", "sub_id")), Seq("sub_id"), "left_semi"))
     // prior-run SN pairs of the same buckets (old records only, bucket
@@ -558,7 +547,6 @@ object EntityResolution {
     // eager: feeds both edge filtering (semi + anti) below; tiny
     val staleSnPairs = snDropped.join(sharedKey, Seq("main_id", "sub_id"), "left_anti")
       .localCheckpoint(true)
-    ph("sn-drift stale set materialized")
 
     // checkpointed: feeds the scoring funnel, the pair-id pruning frame
     // below, AND Result.candidatePairs (probed/evaluated after the fold) —
@@ -589,7 +577,6 @@ object EntityResolution {
     val newEdges = scored.filter(col("score") >= cfg.tau)
       .select("main_id", "sub_id", "score")
       .localCheckpoint(true)
-    ph("new-involving pairs scored")
     val droppedStaleEdges = oldEdges.select("main_id", "sub_id", "score")
       .join(bcB(staleSnPairs), Seq("main_id", "sub_id"), "left_semi")
     val keptEdges = oldEdges.select("main_id", "sub_id", "score")
@@ -600,7 +587,6 @@ object EntityResolution {
     newEdges.unionByName(keptEdges)
       .write.mode("overwrite").parquet(edgePath)
     val edges = spark.read.parquet(edgePath)
-    ph("edges folded")
 
     // Clustering runs ONLY on the subgraph touched by a new/dropped edge;
     // untouched prior components pass through label-unchanged. Touched
@@ -648,7 +634,6 @@ object EntityResolution {
       .unionByName(untouched.select("node", "component"))
       .write.mode("overwrite").parquet(compPath)
     val components = spark.read.parquet(compPath)
-    ph("clustering folded")
     // manifests last: every table of this fold's state is durable by now
     if (compacted) writeManifests(work, cfg, recordPaths, Seq(s"$work/keys.parquet"), Seq.empty)
     else writeManifests(work, cfg, recordPaths, keyPaths, tombPaths)

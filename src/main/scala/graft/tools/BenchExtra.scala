@@ -13,12 +13,18 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
  * task-seconds are the window-robust number on this shared-tenant host
  * (hypervisor steal moves wall 5-10x between windows while summed task time
  * moves far less), so before/after comparisons quote BOTH, measured
- * back-to-back where possible.
+ * back-to-back where possible. Best-of-N also separates "the operator is
+ * slow" from "the bench window was slow" when a headline number looks off.
  *
  * Usage: runMain graft.tools.BenchExtra <sfDir> <reps> <query...>
  */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
+    if (args.length < 3) {
+      System.err.println("usage: BenchExtra <sfDir> <reps> <query...>\n" +
+        s"queries: ${graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
@@ -29,24 +35,9 @@ object BenchExtra {
     val spark = graft.GraftSession.create(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-benchextra")
     val taskMs = new java.util.concurrent.atomic.AtomicLong()
-    val stageDiag = sys.env.get("SPARK_GRAFT_STAGES").contains("1")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         taskMs.addAndGet(e.taskMetrics.executorRunTime)
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = if (stageDiag) {
-        val si = e.stageInfo
-        val run = si.taskMetrics.executorRunTime / 1000.0
-        if (run > 0.2) {
-          val shr = si.taskMetrics.shuffleReadMetrics.totalBytesRead / 1048576.0
-          val shw = si.taskMetrics.shuffleWriteMetrics.bytesWritten / 1048576.0
-          val in = si.taskMetrics.inputMetrics.bytesRead / 1048576.0
-          println(f"[stg] run=$run%7.2f tasks=${si.numTasks}%3d in=$in%6.1f " +
-            f"shR=$shr%6.1f shW=$shw%6.1f " +
-            si.details.linesIterator.filter(_.startsWith("graft"))
-              .take(2).mkString(" <- "))
-        }
-      }
     })
     graft.testgen.WebCorpus.pagesMaterialized(spark, sfDir)
     for (name <- names) {

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
@@ -17,6 +19,26 @@ import graft.pipeline.EntityResolution
  */
 object IncrementalProbe {
 
+  private[graft] def probeDir(tag: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft-incprobe-$tag"
+
+  /** The cached prior-state dir of `corpus` (see [[measure]]). */
+  private[graft] def priorDir(corpus: String): String =
+    probeDir("prior-" + Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(corpus)))
+
+  /** Build stamp of the engine code: the newest mtime of any class file
+    * under the code source's `graft/` dir, or the jar's mtime when the code
+    * runs from a jar (0 if neither can be read). Any engine recompile —
+    * pipeline, blocking, clustering or kernels — moves it. */
+  private[graft] def codeStamp: Long = try {
+    val src = new java.io.File(EntityResolution.getClass.getProtectionDomain
+      .getCodeSource.getLocation.toURI)
+    if (src.isFile) src.lastModified()
+    else org.apache.commons.io.FileUtils
+      .listFiles(new java.io.File(src, "graft"), Array("class"), true)
+      .asScala.foldLeft(0L)((m, f) => math.max(m, f.lastModified()))
+  } catch { case _: Exception => 0L }
+
   /** Run the prior/full/incremental comparison; returns one JSON object.
     *
     * `maxReps` > 1 re-measures BOTH sides (interleaved full, inc, full,
@@ -33,7 +55,7 @@ object IncrementalProbe {
     val isNew = pmod(xxhash64(col("url")), lit(mod)) === 0
 
     def tmp(tag: String) = {
-      val d = s"${System.getProperty("java.io.tmpdir")}/graft-incprobe-$tag"
+      val d = probeDir(tag)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)); d
     }
     def time(f: => Unit): Double = {
@@ -44,19 +66,11 @@ object IncrementalProbe {
     // resolve is DETERMINISTIC given (corpus, mod, pipeline build), so it is
     // cached in a stable dir and reused across reps and bench rounds — the
     // probe then spends its budget on the two timed sides only. The marker
-    // keys on the corpus, the split, and the compiled pipeline's class-file
-    // mtime (a recompile of EntityResolution invalidates the cache);
+    // keys on the corpus, the split, and the engine's build stamp
+    // ([[codeStamp]]: any recompile invalidates the cache);
     // resolveIncremental additionally validates the state dir's manifest
     // chain and config signature and aborts loudly on any mismatch.
-    val codeStamp = try {
-      val loc = EntityResolution.getClass.getProtectionDomain
-        .getCodeSource.getLocation.toURI
-      val cls = new java.io.File(new java.io.File(loc),
-        "graft/pipeline/EntityResolution$.class")
-      if (cls.exists()) cls.lastModified() else 0L
-    } catch { case _: Exception => 0L }
-    val w1 = s"${System.getProperty("java.io.tmpdir")}/graft-incprobe-prior-" +
-      Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(corpus))
+    val w1 = priorDir(corpus)
     val marker = new java.io.File(w1, "probe.marker")
     val markerWant = s"corpus=$corpus mod=$mod code=$codeStamp"
     val cached = marker.exists() && new String(
